@@ -1,94 +1,75 @@
 package graft
 
-/** One-stop round board (r16, r15 verdict #7): joins the newest
-  * CORRECTNESS_r*.json × newest BENCH_DETAIL_r*.json ×
-  * [[LintBench.acceptedFloors]] × the declared key set into the single
-  * table the judge's coverage section re-assembles by hand every
-  * round. Plain file scans, no SparkSession — milliseconds.
-  *
-  * Output: one markdown row per declared key —
-  * `| key | correctness | sf0.1 s | floor | flags |` — followed by a
-  * summary line (key counts, pass counts, total seconds, s/key).
-  * Flags mark anything a judge would chase: `over-budget` (> 2 s),
-  * `unswept` / `errored` (bench), `unchecked` / `fail` (correctness),
-  * `floor-repinned` (an acceptedFloors adjudication applies).
+import com.fasterxml.jackson.databind.JsonNode
+import scala.jdk.CollectionConverters._
+
+/** Round board: joins the newest `CORRECTNESS_r*.json` with the newest
+  * [[Bench]] run record over the declared key set, one markdown row per
+  * key — `| key | correctness | median s | min–max s | flags |` — and a
+  * summary line. Flags mark what needs a look: `over-budget` (median
+  * over [[LintBench.budgetSec]]), `unswept` / `errored` (bench),
+  * `unchecked` / `fail` (correctness). Plain file reads, no Spark session.
   */
 object BoardReport {
 
-  /** Newest file matching `pattern`, by embedded round number. */
-  private def newest(pattern: String, prefix: String): Option[java.io.File] =
-    Bench.benchFiles(pattern).sortBy(f =>
-      f.getName.stripPrefix(prefix).stripSuffix(".json")
-        .toIntOption.getOrElse(0)).lastOption
-
-  /** CORRECTNESS_r*.json → key → short status. The driver writes one
-    * object per key: hash/rows/schema booleans (null when no oracle)
-    * plus an `err` string. */
-  private[graft] def parseCorrectness(txt: String): Map[String, String] = {
-    val block = """"([A-Za-z0-9_]+)":\s*\{([^{}]*)\}""".r
-    block.findAllMatchIn(txt).map { m =>
-      val (key, body) = (m.group(1), m.group(2))
-      def field(n: String): Option[String] =
-        (""""""" + n + """":\s*("[^"]*"|true|false|null|-?[0-9.]+)""").r
-          .findFirstMatchIn(body).map(_.group(1))
-      val err = field("err").getOrElse("null")
+  /** `CORRECTNESS_r*.json` (one object per key: hash/rows/schema match
+    * booleans, null when no oracle, plus an `err` string) → key → status.
+    */
+  private def parseCorrectness(root: JsonNode): Map[String, String] =
+    root.properties.asScala.map { e =>
+      val v = e.getValue
+      val err = v.path("err")
       val status =
-        if (err == "\"no_oracle\"") "no-oracle (spec-tested)"
-        else if (err != "null") s"ERROR $err"
+        if (err.asText == "no_oracle") "no-oracle (spec-tested)"
+        else if (!err.isMissingNode && !err.isNull) s"ERROR ${err.asText}"
         else if (Seq("rows_match", "schema_match", "hash_match")
-            .forall(f => field(f).contains("true"))) "pass"
+            .forall(v.path(_).asBoolean(false))) "pass"
         else "FAIL"
-      key -> status
+      e.getKey -> status
     }.toMap
-  }
 
-  def report(): String = {
+  def report(dir: java.io.File): String = {
     val declared = SparkEntry.queries.keySet
-    val corrFile = newest("CORRECTNESS_r\\d+\\.json", "CORRECTNESS_r")
-    val benchFile = newest("BENCH_DETAIL_r\\d+\\.json", "BENCH_DETAIL_r")
-    def read(f: Option[java.io.File]): String = f.map { x =>
-      try scala.io.Source.fromFile(x).mkString catch { case _: Throwable => "" }
-    }.getOrElse("")
-    val corr = parseCorrectness(read(corrFile))
-    val benchTxt = read(benchFile)
-    val bench = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(benchTxt.split("\"plans\"").head.split("\"summary\"").head)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val corrFile = Option(dir.listFiles).toSeq.flatten
+      .filter(_.getName.matches("CORRECTNESS_r\\d+\\.json"))
+      .sortBy(_.getName.filter(_.isDigit).toInt).lastOption
+    val benchFile = LintBench.records(dir).lastOption
+    val corr = corrFile.map(f => parseCorrectness(Bench.json.readTree(f))).getOrElse(Map.empty)
+    val bench = benchFile.map(f => Bench.json.readTree(f).path("queries"))
     val sb = new StringBuilder
     sb ++= s"# Board — ${corrFile.map(_.getName).getOrElse("(no correctness)")}"
-    sb ++= s" × ${benchFile.map(_.getName).getOrElse("(no bench detail)")}\n\n"
-    sb ++= "| key | correctness | sf0.1 s | floor | flags |\n"
+    sb ++= s" × ${benchFile.map(_.getName).getOrElse("(no bench record)")}\n\n"
+    sb ++= "| key | correctness | median s | min–max s | flags |\n"
     sb ++= "| --- | --- | --- | --- | --- |\n"
-    var pass = 0; var noOracle = 0; var bad = 0
-    declared.toSeq.sorted.foreach { k =>
-      val c = corr.getOrElse(k, "unchecked (new this round)")
-      if (c == "pass") pass += 1
-      else if (c.startsWith("no-oracle")) noOracle += 1
-      else if (c.startsWith("FAIL") || c.startsWith("ERROR")) bad += 1
-      val t = bench.get(k)
+    val rows = declared.toSeq.sorted.map { k =>
+      val c = corr.getOrElse(k, "unchecked")
+      val q = bench.map(_.path(k)).filterNot(_.isMissingNode)
+      val t = q.map(_.path("median").asDouble(-1))
       val tStr = t.map(v => if (v < 0) "errored" else f"$v%.2f").getOrElse("unswept")
-      val floor = LintBench.acceptedFloors.get(k)
-        .map(v => f"$v%.2f").getOrElse("")
+      val spread = q.filter(_.has("min"))
+        .map(n => f"${n.get("min").asDouble}%.2f–${n.get("max").asDouble}%.2f").getOrElse("")
+      val failed = c.startsWith("FAIL") || c.startsWith("ERROR")
       val flags = Seq(
-        if (t.exists(_ > LintBench.budgetSec)) Some("over-budget") else None,
-        if (t.isEmpty) Some("unswept") else None,
-        if (t.exists(_ < 0)) Some("errored") else None,
-        if (c.startsWith("FAIL") || c.startsWith("ERROR")) Some("fail") else None,
-        if (c.startsWith("unchecked")) Some("unchecked") else None,
-        if (floor.nonEmpty) Some("floor-repinned") else None
-      ).flatten.mkString(", ")
-      sb ++= s"| $k | $c | $tStr | $floor | $flags |\n"
+        t.exists(_ > LintBench.budgetSec) -> "over-budget",
+        t.isEmpty -> "unswept",
+        t.exists(_ < 0) -> "errored",
+        failed -> "fail",
+        (c == "unchecked") -> "unchecked"
+      ).collect { case (true, f) => f }.mkString(", ")
+      sb ++= s"| $k | $c | $tStr | $spread | $flags |\n"
+      (c, t, failed)
     }
-    val timed = declared.toSeq.flatMap(bench.get).filter(_ >= 0)
-    val stale = (bench.keySet -- declared).toSeq.sorted
+    val pass = rows.count(_._1 == "pass")
+    val noOracle = rows.count(_._1.startsWith("no-oracle"))
+    val bad = rows.count(_._3)
+    val timed = rows.flatMap(_._2).filter(_ >= 0)
+    val stale = bench.toSeq.flatMap(_.fieldNames.asScala).filterNot(declared).sorted
     sb ++= f"\n**${declared.size} keys: $pass pass, $noOracle no-oracle, " +
       f"$bad fail/error, ${declared.size - pass - noOracle - bad} other; " +
-      f"bench ${timed.size} timed, total ${timed.sum}%.1f s " +
-      f"(${timed.sum / math.max(1, timed.size)}%.3f s/key)" +
-      (if (stale.nonEmpty) s"; STALE bench keys: ${stale.mkString(",")}"
-       else "") + "**\n"
+      f"bench ${timed.size} timed, total of medians ${timed.sum}%.1f s" +
+      (if (stale.nonEmpty) s"; STALE bench keys: ${stale.mkString(",")}" else "") + "**\n"
     sb.toString
   }
 
-  def main(args: Array[String]): Unit = print(report())
+  def main(args: Array[String]): Unit = print(report(new java.io.File(".")))
 }

@@ -12,14 +12,11 @@ package graft
   *
   * arg0 = output directory, arg1 = filename suffix, rest = keys
   * (empty rest = all keys). Formatted mode is the PHYSICAL plan with
-  * operator details (PushedFilters, ReadSchema, join build side) —
-  * complementary to [[FpDump]], which dumps the normalized OPTIMIZED
-  * LOGICAL text the merge fingerprint hashes.
+  * operator details (PushedFilters, ReadSchema, join build side).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     require(args.length >= 2, "usage: ExplainDump <outDir> <suffix> [keys…]")
     val outDir = new java.io.File(args(0))
     outDir.mkdirs()
@@ -28,7 +25,7 @@ object ExplainDump {
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: $unknown")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     keys.sorted.foreach { name =>
       val txt =
         try SparkEntry.queries(name)(spark, sfDir)

@@ -57,8 +57,14 @@ object GraftSession {
         (1 << 20).toString)
       .config("spark.ui.enabled", "false")
 
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else every core the
+    * JVM sees.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Build-and-quiet: the form the mains use. */
-  def local(cores: Int): SparkSession = {
+  def local(cores: Int = cpus): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

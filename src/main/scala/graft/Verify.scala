@@ -10,14 +10,13 @@ object Verify {
     val only = args.drop(2).toSet
     val keys = if (only.isEmpty) SparkEntry.queries
                else SparkEntry.queries.filter(k => only(k._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     keys.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.describe(e)}")
       }
       // drop pins between keys: a live entry taxes every later key's
       // plan compilation (Pins.clearAll scaladoc) — ~170 keys in one

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Ckpt.CkptOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -75,7 +74,7 @@ object CorpusPipeline {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "digest")
-      .ckptLocal
+      .localCheckpoint(false)
     mark("exact-ckpt-plan", tEx)
     // 3. near-dup drop: verified pairs → connected components → keep
     //    each component's smallest id (exact, chain-bias-free)
@@ -708,7 +707,7 @@ object CorpusPipeline {
     val scored = graft.T.spread(docs).select(col("doc_id"),
       round(LlmText.qualityScore(col("text")), 4).as("quality"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .ckptLocal // feeds total, bucket totals, and the final
+      .localCheckpoint(false) // feeds total, bucket totals, and the final
     val tot = scored.agg(sum(col("n_tok")).as("total"))
     val bucketed = scored
       .withColumn("bkt", floor(col("quality") * 8).cast("long"))

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -336,7 +335,7 @@ object LlmDedup {
     // materialize inside the loop's round-0 probe job, which also
     // stops the union re-EXECUTING the verify joins per direction.
     val tP = System.nanoTime()
-    val p = pairs.ckptLocal
+    val p = pairs.localCheckpoint(false)
     if (sys.props.contains("graft.cc.debug")) println(
       f"CC pairs-ckpt-plan ${(System.nanoTime() - tP) / 1e9}%.3fs")
     val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
@@ -550,7 +549,7 @@ object LlmDedup {
     // runs, and PlanSpec's join-shape audits read the candidate joins
     // ABOVE this boundary, which the leaf leaves visible.
     val sets = shingled(docs).select(col("doc_id"), col("shingles"))
-      .ckptLocal
+      .localCheckpoint(false)
     // Whole signature in ONE codegen'd pass — each shingle hashed once,
     // k affine minima tracked in a tight loop — via the PORTABLE
     // 48-bit-md5 battery ([[graft.functions.Minhash48]], r12;

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,7 +88,7 @@ object LlmGraph {
     // No broadcast: deg is node-count sized — fine here, not at 10^9
     // nodes, and the co-partitioned join is free anyway.
     val withDeg = edges.join(deg.hint("shuffle_hash"), "src")
-      .ckptLocal
+      .localCheckpoint(false)
     // One synchronous round: damp-and-sum per-edge contributions to dst.
     def step(contribs: DataFrame): DataFrame =
       contribs.groupBy("dst")
@@ -196,7 +195,7 @@ object LlmGraph {
       s"edges must be exactly (src, dst), got: ${edges.columns.mkString(",")}")
     val dbg = sys.props.contains("graft.cc.debug")
     val tE = System.nanoTime()
-    val e = edges.ckptLocal
+    val e = edges.localCheckpoint(false)
     if (dbg) println(
       f"CC edges-ckpt-plan ${(System.nanoTime() - tE) / 1e9}%.3fs")
     if (dbg) {
@@ -311,7 +310,7 @@ object LlmGraph {
       // to the probe job — one planning pass per round — and still
       // truncates lineage so plan DEPTH stays constant.
       val tCk = System.nanoTime()
-      val next = stepped.ckptLocal
+      val next = stepped.localCheckpoint(false)
       if (sys.props.contains("graft.cc.debug")) println(
         f"CC round=$rounds ckpt-plan ${(System.nanoTime() - tCk) / 1e9}%.3fs")
       // The convergence probe is the round's one scheduled job; it
@@ -454,7 +453,7 @@ object LlmGraph {
         .filter(col("l_quantity") === 50 && col("l_partkey") % 10 === 0 &&
           col("l_suppkey") % 2 === 0)
         .select(p.as("src"), su.as("dst")).distinct()
-        .ckptLocal
+        .localCheckpoint(false)
       val edges = fwd.unionByName(
         fwd.select(col("dst").as("src"), col("src").as("dst")))
       components(edges)
@@ -691,14 +690,14 @@ object LlmGraph {
   def assocRules(baskets: DataFrame, minPairSupport: Int): DataFrame = {
     require(minPairSupport >= 1, s"minPairSupport must be >= 1")
     graft.functions.VectorExpressions.register(baskets.sparkSession)
-    val b = baskets.select(col("items")).ckptLocal
+    val b = baskets.select(col("items")).localCheckpoint(false)
     val nb = b.agg(count(lit(1)).as("n_baskets"))
     // Item supports feed BOTH sides of the pair join — checkpoint the
     // item-sized result so the corpus-sized explode+count runs once,
     // not once per join side.
     val isup = b.select(explode(col("items")).as("p"))
       .groupBy("p").agg(count(lit(1)).as("s"))
-      .ckptLocal
+      .localCheckpoint(false)
     val pairs = b
       .select(explode(call_function("graft_pairs", col("items"))).as("pr"))
       .groupBy(col("pr.u").as("u"), col("pr.v").as("v"))
@@ -710,7 +709,7 @@ object LlmGraph {
     // checkpoint sits HERE, just before the mirror union (the
     // supportEdges lesson: a frame referenced by both union branches
     // otherwise embeds and re-plans its whole pipeline twice).
-    val supported = supportedPairs(pairs, isup).ckptLocal
+    val supported = supportedPairs(pairs, isup).localCheckpoint(false)
     val directed = supported
       .select(col("u").as("antecedent"), col("v").as("consequent"),
         col("sab"), col("su").as("sa"), col("sv").as("sb"))
@@ -841,7 +840,7 @@ object LlmGraph {
   def seedDistance(edges: DataFrame, isSeed: org.apache.spark.sql.Column,
       depth: Int, assumeSimple: Boolean = false): DataFrame = {
     require(depth >= 1 && depth < 999, s"depth must be in [1, 999): $depth")
-    val e = edges.select(col("src"), col("dst")).ckptLocal
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
     // Round-1 fast path (r13): over DISTINCT edges the first
     // relaxation needs no join at all — every node's candidate is
     // min over neighbors of their seed-init distance, so ONE
@@ -887,7 +886,7 @@ object LlmGraph {
       // once per round and doesn't need this). A lazy checkpoint per
       // round pins the node-sized frame instead: three tiny
       // materializations replace the exponential re-computation.
-      val dc = d.ckptLocal
+      val dc = d.localCheckpoint(false)
       val nb = e
         .join(dc.select(col("node").as("dst"), col("dist").as("dd")),
           Seq("dst"))
@@ -933,7 +932,7 @@ object LlmGraph {
   def labelPropagation(edges: DataFrame, rounds: Int,
       assumeSimple: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst")).ckptLocal
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
     // Round-1 fast path (r13): with DISTINCT edges and self-id init,
     // every neighbor votes a UNIQUE label (its own id) exactly once —
     // all counts are 1, so the (count desc, label asc) argmax is just
@@ -998,7 +997,7 @@ object LlmGraph {
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
         .select("u", "v")
-        .ckptLocal
+        .localCheckpoint(false)
     }
     mirror(edges).groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -1208,7 +1207,7 @@ object LlmGraph {
           when(uLtV, col("u")).otherwise(col("v")).as("s"),
           when(uLtV, col("v")).otherwise(col("u")).as("t"),
           when(uLtV, col("dv")).otherwise(col("du")).as("dt"))
-        .ckptLocal
+        .localCheckpoint(false)
     val w1 = oriented.select(col("s"), col("t").as("b"), col("dt").as("db"))
     val w2 = oriented.select(col("s"), col("t").as("c"), col("dt").as("dc"))
     val wedges = w1.join(w2, Seq("s"))

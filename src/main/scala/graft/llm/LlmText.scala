@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,7 +111,7 @@ object LlmText {
       graft.functions.VectorExpressions.register(s)
       val docs = T.spread(T.documents(s, d))
         .select(split(col("text"), " ").as("ts"))
-        .ckptLocal // feeds totals, unigrams, and bigrams
+        .localCheckpoint(false) // feeds totals, unigrams, and bigrams
       val tot = docs.agg(
         sum(size(col("ts"))).cast("long").as("nt"),
         sum(greatest(size(col("ts")) - 1, lit(0))).cast("long").as("nb"))
@@ -396,10 +395,10 @@ object LlmText {
       // full corpus tokenization pass.
       val bid = bi.groupBy("doc_id", "tok", "nxt")
         .agg(count(lit(1)).as("m"))
-        .ckptLocal
+        .localCheckpoint(false)
       val bic = bid.groupBy("tok", "nxt").agg(sum("m").as("cb"))
       val uni = toks.groupBy("tok").agg(count(lit(1)).as("cu"))
-        .ckptLocal
+        .localCheckpoint(false)
       val vsz = uni.agg(count(lit(1)).as("vsz"))
       bid.join(bic, Seq("tok", "nxt"))
         .join(uni, Seq("tok"))

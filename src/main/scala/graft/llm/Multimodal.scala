@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -260,7 +259,7 @@ object Multimodal {
     require(maxDist >= 0, s"maxDist must be >= 0: $maxDist")
     // sigs feeds stats, the runner-up pass, sig-pairs, and the final
     // assembly — materialize once (lazy, off the CacheManager).
-    val sg = sigs.ckptLocal
+    val sg = sigs.localCheckpoint(false)
     val stats = sg.groupBy("signature")
       .agg(min("doc_id").as("mn"), count(lit(1)).as("cnt"))
     // Runner-up doc_id per shared signature — the min doc's own 1-NN.

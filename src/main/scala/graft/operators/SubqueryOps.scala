@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Ckpt.CkptOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** §2.13 Subquery / decorrelation tier (r16 = driver round 13, the r12
@@ -183,12 +182,12 @@ object SubqueryOps {
     // scale-safe shape at ANY sf — without it every loop stage runs
     // 32 near-empty tasks over a 75-row frame.
     val paircnt = s.sql(paircntFrag(pq(d, _))).coalesce(1)
-      .ckptLocal
+      .localCheckpoint(false)
     paircnt.createOrReplaceTempView("graft_subrec_paircnt")
     val trade = s.sql(tradeFrag("graft_subrec_paircnt")).coalesce(1)
-      .ckptLocal
+      .localCheckpoint(false)
     val seed = s.sql(seedFrag("graft_subrec_paircnt")).coalesce(1)
-      .ckptLocal
+      .localCheckpoint(false)
     trade.createOrReplaceTempView("graft_subrec_trade")
     seed.createOrReplaceTempView("graft_subrec_seed")
     val out = s.sql("WITH RECURSIVE " + reachCteAndSelect(

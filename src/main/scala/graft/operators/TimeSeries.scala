@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -426,7 +425,7 @@ object TimeSeries {
           col("value") - lag(col("ewma"), 1).over(
             Window.partitionBy("user_id").orderBy("ts", "event_id")))
         .filter(col("resid").isNotNull)
-        .ckptLocal
+        .localCheckpoint(false)
       val f = r.groupBy("user_id").agg(
         expr("percentile(resid, 0.25D)").as("q1"),
         expr("percentile(resid, 0.75D)").as("q3"))

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import graft.Ckpt.CkptOps
 import graft.T
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
 /** §2.10 Streaming operators. The reference is batch-only CLI; these
   * extend the engine to the streaming surface the north star demands.
@@ -35,10 +34,10 @@ object StreamOps {
     * the `transformWithState` form of the stateful op. Forward API vs
     * `flatMapGroupsWithState`: named state variables created on a
     * handle (value/list/map), timers, TTL — the shape every new
-    * stateful pipeline should target; [[runningCounts]] keeps the
-    * fMGWS form as the fallback path (SURVEY §7.4.6). State is one
+    * stateful pipeline should target (SURVEY §7.4.6); StreamingSpec
+    * checks it against an fMGWS reference. State is one
     * ValueState[Long] per user — bounded by the user population, not
-    * the event volume, same as the fMGWS version.
+    * the event volume, same as the fMGWS form.
     */
   final class RunningCountProcessor
       extends StatefulProcessor[Long, (Long, Long), UserCount] {
@@ -441,7 +440,7 @@ object StreamOps {
         org.apache.spark.sql.expressions.Window
           .partitionBy("digest").orderBy("doc_id")))
       .filter(col("rn") === 1).drop("rn", "digest")
-      .ckptLocal
+      .localCheckpoint(false)
     val keep = nearDupFlags(exact.select(col("doc_id"), col("text")))
       .filter(!col("near_dup")).select("doc_id")
     exact.join(keep, Seq("doc_id"))
@@ -1006,24 +1005,6 @@ object StreamOps {
       .toDF()
   }
 
-  /** Running per-user count via `flatMapGroupsWithState` — the
-    * pre-Spark-4 stateful API, kept as the fallback path.
-    */
-  def runningCountsFMGWS(events: DataFrame): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.select(col("user_id"), col("event_id")).as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, UserCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + rows.size
-          state.update(n)
-          Iterator(UserCount(uid, n))
-      }
-      .toDF()
-  }
-
   val queries: Map[String, Q] = Map(
     // Tumbling 1-hour windows: identical in readStream mode.
     "stream_tumbling" -> ((s, d) =>
@@ -1115,9 +1096,8 @@ object StreamOps {
     // Arbitrary stateful processing: running per-user event count via
     // transformWithState (r8 — Spark 4's forward stateful API: named
     // state variables, timers, TTL), carrying custom state across
-    // micro-batches; [[runningCountsFMGWS]] keeps the
-    // flatMapGroupsWithState form as the fallback path. Cross-batch
-    // behavior of BOTH APIs is asserted in StreamingSpec.
+    // micro-batches. StreamingSpec asserts its cross-batch behavior and
+    // its agreement with a flatMapGroupsWithState reference.
     "stream_stateful" -> ((s, d) =>
       runningCountsTWS(T.events(s, d)).orderBy("user_id")),
 

@@ -2,28 +2,33 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Planted-fixture drive of [[LintBench.lint]] (r16 = driver round 13,
-  * r12 verdict #4): each failure mode is demonstrated on a fixture
-  * built to trip exactly it, plus a clean set that must pass — the
-  * drift trigger in particular is pinned to "BOTH of the last two
-  * rounds above older-min + 0.3 s", with negative controls for a
-  * single spike and for a key too new to have a baseline.
+/** Planted-record drive of [[LintBench.lint]]: each failure mode is
+  * demonstrated on records built to trip exactly it, plus a clean set
+  * that must pass — the drift trigger in particular is pinned to "BOTH
+  * of the two newest records above older-min + 0.3 s", with negative
+  * controls for a single spike, for a key too new to have a baseline
+  * and for history from another environment.
   */
-class LintBenchSpec extends AnyFunSuite with SparkSpec {
+class LintBenchSpec extends AnyFunSuite {
 
-  private def plant(dir: java.nio.file.Path, round: Int,
+  private val here = """{"nproc":4,"cores":4,"max_heap_mb":7168,"sf":"x","""
+
+  /** A record in [[Bench.sweep]]'s format; `seq` orders it in time. */
+  private def plant(dir: java.nio.file.Path, seq: Int, entries: (String, Double)*)
+      : java.io.File = plantIn(dir, seq, here, entries: _*)
+
+  private def plantIn(dir: java.nio.file.Path, seq: Int, env: String,
       entries: (String, Double)*): java.io.File = {
-    val qs = entries.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    // Summary embedded exactly the way Bench.main writes it — the lint
-    // must exclude its numeric fields via Bench.summaryNumericFields.
-    val summary = s"""{"metric":"total","value":9.9,"unit":"sec",""" +
-      s""""nqueries":${entries.size},"timed":${entries.size},""" +
-      s""""errors":[],"retried":[],"loadavg_before":0.5,""" +
-      s""""loadavg_after":0.6,"sf":"x"}"""
-    val f = dir.resolve(s"BENCH_DETAIL_r$round.json").toFile
+    val qs = entries.map { case (k, v) =>
+      if (v < 0) s""""$k":{"median":-1.0,"error":"java.lang.IllegalStateException: x"}"""
+      else s""""$k":{"median":$v,"min":$v,"max":$v}"""
+    }.mkString("{", ",", "}")
+    val errors = entries.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val f = dir.resolve(f"BENCH_FRESH_202601$seq%02dT000000Z.json").toFile
     val w = new java.io.PrintWriter(f)
-    try w.println(s"""{"queries":$qs,"summary":$summary}""") finally w.close()
+    try w.println(s"""{"env":$env"loadavg_before":0.5,"loadavg_after":0.6},""" +
+      s""""queries":$qs,"errors":$errors}""")
+    finally w.close()
     f
   }
 
@@ -36,6 +41,7 @@ class LintBenchSpec extends AnyFunSuite with SparkSpec {
       plant(d, 2, "a" -> 0.55, "b" -> 0.62),
       plant(d, 3, "a" -> 0.6, "b" -> 0.5))
     assert(LintBench.lint(files, Set("a", "b")).isEmpty)
+    assert(LintBench.records(d.toFile).map(_.getName) == files.map(_.getName))
   }
 
   test("missing / errored / stale keys fail against the newest detail") {
@@ -54,11 +60,22 @@ class LintBenchSpec extends AnyFunSuite with SparkSpec {
     assert(msgs.contains("over-budget") && msgs.contains("a=2.50"), msgs)
   }
 
+  test("newest record gates coverage and budget; a slow newest run fails") {
+    val d = fresh()
+    val bad = plant(d, 2, "a" -> 0.5, "b" -> -1.0, "zombie" -> 0.3)
+    val clean = plant(d, 3, "a" -> 0.6, "b" -> 0.5)
+    assert(LintBench.lint(Seq(clean, bad), Set("a", "b")).isEmpty)
+    val slow = plant(d, 4, "a" -> 2.5, "b" -> 0.5)
+    val msgs = LintBench.lint(Seq(bad, clean, slow), Set("a", "b"))
+    assert(msgs.size == 1 && msgs.head.contains("over-budget(>2.0s)=a=2.50"),
+      msgs.mkString("\n"))
+  }
+
   test("drift: two consecutive rounds above older-min + 0.3 fail; " +
     "a single spike or a two-round-old key do not") {
     val d = fresh()
-    // a regresses 1.0 → 1.4 → 1.45 (both last rounds over 1.3) = drift;
-    // b spikes once then recovers = clean; n has only 2 rounds = clean.
+    // a regresses 1.0 → 1.4 → 1.45 (both newest over 1.3) = drift;
+    // b spikes once then recovers = clean; n has only 2 records = clean.
     val files = Seq(
       plant(d, 1, "a" -> 1.0, "b" -> 1.0),
       plant(d, 2, "a" -> 1.4, "b" -> 1.9, "n" -> 1.0),
@@ -70,216 +87,22 @@ class LintBenchSpec extends AnyFunSuite with SparkSpec {
       msgs.mkString("\n"))
   }
 
-  test("no detail file at all fails") {
-    assert(LintBench.lint(Seq.empty, Set("a")).nonEmpty)
-  }
-
-  private def plantFresh(dir: java.nio.file.Path, round: Int,
-      entries: (String, Double)*): java.io.File = {
-    val qs = entries.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":9.9,"unit":"sec",""" +
-      s""""nqueries":${entries.size},"timed":${entries.size},""" +
-      s""""errors":[],"retried":[],"loadavg_before":0.5,""" +
-      s""""loadavg_after":0.6,"sf":"x"}"""
-    val f = dir.resolve(s"BENCH_FRESH_r$round.json").toFile
-    val w = new java.io.PrintWriter(f)
-    try w.println(s"""{"queries":$qs,"summary":$summary}""") finally w.close()
-    f
-  }
-
-  test("fresh artifact (r18 verdict #1): newest file gates coverage — " +
-    "missing / errored / stale fail, a clean slow run passes, " +
-    "no file at all fails") {
+  test("a record from another environment does not count toward drift history") {
     val d = fresh()
-    // Coverage problems on the newest fresh file fail by name.
-    val bad = Seq(plantFresh(d, 2, "a" -> 0.5, "b" -> -1.0, "zombie" -> 0.3))
-    val msgs = LintBench.lintFresh(bad, Set("a", "b", "c")).mkString("\n")
-    assert(msgs.contains("fresh missing=c"), msgs)
-    assert(msgs.contains("fresh errored=b"), msgs)
-    assert(msgs.contains("fresh stale=zombie"), msgs)
-    // A complete fresh run passes even over the 2 s budget: fresh runs
-    // are single load-exposed sweeps; budget/drift stay on the board.
-    val slow = Seq(plantFresh(d, 3, "a" -> 2.5, "b" -> 0.5))
-    assert(LintBench.lintFresh(slow, Set("a", "b")).isEmpty)
-    // The NEWEST round's file is the one checked.
-    assert(LintBench.lintFresh(bad ++ slow, Set("a", "b")).isEmpty)
-    assert(LintBench.lintFresh(Seq.empty, Set("a")).nonEmpty)
-  }
-
-  test("min-merge: a prior reading survives only under a matching plan " +
-    "fingerprint (r15 verdict #3 — stale-prior invalidation)") {
-    // Prior file: both keys timed fast, fingerprints committed.
-    val priorTxt =
-      """{"queries":{"a":0.40,"b":0.50,"c":0.30},""" +
-        """"plans":{"a":"aaaa11","b":"bbbb22","c":"cccc33"},""" +
-        """"summary":{"metric":"total","value":1.2}}"""
-    // This run: a unchanged (same fingerprint) but slower — prior min
-    // survives; b re-implemented mid-round (fingerprint changed) —
-    // prior reading is evidence for dead code and must be dropped;
-    // c errored this run — the -1 sentinel always wins the merge.
-    val current = Seq("a" -> 0.55, "b" -> 0.80, "c" -> -1.0)
-    val plans = Map("a" -> "aaaa11", "b" -> "ffff99", "c" -> "cccc33")
-    val merged = Bench.mergeDetail(current, plans, priorTxt,
-      Set("a", "b", "c")).toMap
-    assert(merged("a") == 0.40, "matching fingerprint: min-merge applies")
-    assert(merged("b") == 0.80, "changed fingerprint: prior invalidated")
-    assert(merged("c") == -1.0, "current error sentinel always wins")
-  }
-
-  test("cross-round seed (r17 verdict #1): the previous round's reading " +
-    "survives only under a matching fingerprint; a changed plan rejects " +
-    "the carry and the error sentinel still always wins") {
-    // Same-round prior: both keys re-ran this round already.
-    val sameRound =
-      """{"queries":{"a":0.50,"b":0.45},""" +
-        """"plans":{"a":"aaaa11","b":"bbbb22"},""" +
-        """"summary":{"metric":"total","value":0.95}}"""
-    // Previous round's board: quieter readings for all three keys —
-    // but b's plan changed between rounds (its r-1 fingerprint is for
-    // code that no longer exists) and c errors THIS run.
-    val prevRound =
-      """{"queries":{"a":0.40,"b":0.30,"c":0.20},""" +
-        """"plans":{"a":"aaaa11","b":"ffff99","c":"cccc33"},""" +
-        """"summary":{"metric":"total","value":0.90}}"""
-    val current = Seq("a" -> 0.55, "b" -> 0.60, "c" -> -1.0)
-    val plans = Map("a" -> "aaaa11", "b" -> "bbbb22", "c" -> "cccc33")
-    val merged = Bench.seedFromPriors(current, plans,
-      Seq(sameRound, prevRound), Set("a", "b", "c")).toMap
-    assert(merged("a") == 0.40,
-      "unchanged fingerprint: the prior round's quiet minimum seeds the board")
-    assert(merged("b") == 0.45,
-      "changed fingerprint: the cross-round carry is rejected but the " +
-        "matching same-round prior still min-merges")
-    assert(merged("c") == -1.0, "current error sentinel always wins")
-  }
-
-  test("min-merge: an old-format prior file (no plans section) cannot " +
-    "prove what it measured — all prior readings are dropped") {
-    val priorTxt = """{"queries":{"a":0.40},""" +
-      """"summary":{"metric":"total","value":0.4}}"""
-    val merged = Bench.mergeDetail(Seq("a" -> 0.55),
-      Map("a" -> "aaaa11"), priorTxt, Set("a")).toMap
-    assert(merged("a") == 0.55)
-  }
-
-  test("plan fingerprints are stable across plan rebuilds for the same " +
-    "code and differ across plans") {
-    import spark.implicits._
-    def build() = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-      .groupBy("v").count()
-    val a1 = Bench.planFingerprint(build())
-    val a2 = Bench.planFingerprint(build()) // rebuild → fresh exprIds
-    assert(a1 == a2, "exprId churn must not change the fingerprint")
-    val other = Bench.planFingerprint(
-      Seq((1L, "x")).toDF("id", "v").groupBy("id").count())
-    assert(other != a1, "a different plan must fingerprint differently")
-  }
-
-  test("checkpoint lineage (r19): a code change HIDDEN behind a " +
-    "localCheckpoint leaf still flips the fingerprint; identical " +
-    "rebuilds stay stable") {
-    // The r19 blind spot made real: corpus_curate's candidate-stage
-    // restructure sat entirely behind the pairs checkpoint, its
-    // fingerprint did not move, and the board carried the old code's
-    // minimum. Ckpt.local registers the child plan's lineage hash so
-    // the fingerprint sees through the LogicalRDD leaf.
-    // A real parquet scan, NOT a LocalRelation: the optimizer folds a
-    // filtered LocalRelation to bare schema text, which would hide the
-    // threshold from the child hash and vacuously pass this test.
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    def build(thresh: Int) = {
-      val base = T.lineitem(spark, sf)
-        .select(col("l_orderkey").as("a"))
-        .filter(col("a") > thresh) // the CHECKPOINTED subtree
-      Ckpt.local(base).groupBy("a").count()
-    }
-    val f1 = Bench.planFingerprint(build(0))
-    val f2 = Bench.planFingerprint(build(0)) // rebuild: fresh RDD ids
-    assert(f1 == f2, "identical checkpointed pipelines must fingerprint " +
-      "identically across rebuilds")
-    val f3 = Bench.planFingerprint(build(1)) // change INSIDE the ckpt
-    assert(f3 != f1, "a change hidden behind the checkpoint leaf must " +
-      "flip the fingerprint")
-    // Control: a bare (unregistered) localCheckpoint keeps the pre-r19
-    // behavior — no tag, no error.
-    val bare = Seq((1L, 2L)).toDF("a", "b").localCheckpoint(false)
-      .groupBy("b").count()
-    assert(Bench.planFingerprint(bare).nonEmpty)
-  }
-
-  test("fingerprints are core-count independent: an env-derived " +
-    "repartition width must not split fingerprints across environments") {
-    // r16 verdict #1: the builder's and the driver's JVMs run
-    // different local[N]; T.spread-style repartition(defaultParallelism)
-    // put that N into the plan text and 20 keys' committed quiet minima
-    // were discarded by the driver's loaded re-run. The normalizer now
-    // masks partition WIDTHS (the plan SHAPE still fingerprints).
-    import spark.implicits._
-    def build(n: Int) = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-      .repartition(n)
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-    assert(Bench.planFingerprint(build(8)) == Bench.planFingerprint(build(32)),
-      "8-core and 32-core spreads must fingerprint identically")
-    val noSpread = Seq((1L, "x")).toDF("id", "v")
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-    assert(Bench.planFingerprint(build(8)) != Bench.planFingerprint(noSpread),
-      "masking the width must not erase the Repartition node itself")
-    // The width-SENSITIVE secondary hash (r17 advice #1) sees exactly
-    // what the merge fingerprint masks: a width change — so a
-    // same-environment FpDump diff across code versions can name a
-    // deliberate repartition-count change.
-    assert(Bench.widthFingerprint(build(8)) != Bench.widthFingerprint(build(32)),
-      "the width hash must expose a repartition-width change")
-    assert(Bench.widthFingerprint(build(8)) == Bench.widthFingerprint(build(8)),
-      "same width, same code: the width hash is stable")
-  }
-
-  test("plan-text shape lint flags env-variant residue classes") {
-    assert(Bench.planTextShapeViolations("Filter (id#x > 0)").isEmpty)
-    assert(Bench.planTextShapeViolations("Repartition 32, true").nonEmpty,
-      "unmasked core count must be flagged")
-    assert(Bench.planTextShapeViolations(
-      "Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM").nonEmpty)
-    assert(Bench.planTextShapeViolations(
-      "Exchange hashpartitioning(k#x, 32)").nonEmpty,
-      "a cached shuffle fragment's partition count must be flagged " +
-        "so it gets normalized, not silently split fingerprints")
-    assert(Bench.planTextShapeViolations(
-      "Location: InMemoryFileIndex[file:/tmp/graft_stage_x]").nonEmpty,
-      "tmpdir scratch paths are env-variant")
-    assert(Bench.planTextShapeViolations(
-      "Location: InMemoryFileIndex[file:/root/testdata/sf0.1/x.parquet]")
-      .isEmpty, "input fixture paths are the contract, allowed")
-    assert(Bench.planTextShapeViolations(
-      "genesis-cube(/tmp/graft_cube_12411_mini.csv)").isEmpty,
-      "the cube DataSource's deterministic staged fixtures are allowed")
-    assert(Bench.planTextShapeViolations("Filter (id#1 > 0)").nonEmpty,
-      "raw exprIds mean the text was never normalized")
-  }
-
-  test("an accepted-floor re-pin clears an adjudicated regression; " +
-    "readings above the re-pinned floor + slack still drift") {
-    val d = fresh()
-    // a's floor legitimately rose 1.0 → ~1.45 (adjudicated): without a
-    // re-pin this history fails every round forever (r13 advice).
+    // a's only older 1.0 came from a 32-core box; on this box a has two
+    // records and no baseline yet, so 1.4 → 1.45 is not drift.
+    val other = """{"nproc":32,"cores":32,"max_heap_mb":7168,"sf":"x","""
     val files = Seq(
-      plant(d, 1, "a" -> 1.0),
+      plantIn(d, 1, other, "a" -> 1.0),
       plant(d, 2, "a" -> 1.4),
       plant(d, 3, "a" -> 1.45))
-    assert(LintBench.lint(files, Set("a"), Map.empty).nonEmpty,
-      "control: without the re-pin this history must drift-fail")
-    assert(LintBench.lint(files, Set("a"), Map("a" -> 1.45)).isEmpty,
-      "re-pinned floor 1.45 clears readings within slack of it")
-    // But the re-pin is a floor, not a waiver: one round above
-    // floor + slack is a spike (clean); two consecutive fail again.
-    val spike = files :+ plant(d, 4, "a" -> 1.8)
-    assert(LintBench.lint(spike, Set("a"), Map("a" -> 1.45)).isEmpty,
-      "one round over the accepted floor + slack is still a spike")
-    val regressed = spike :+ plant(d, 5, "a" -> 1.82)
-    assert(LintBench.lint(regressed, Set("a"), Map("a" -> 1.45)).nonEmpty,
-      "two rounds > accepted floor + slack must still fail")
+    assert(LintBench.lint(files, Set("a")).isEmpty)
+    // Control: the same 1.0 recorded here is a baseline and trips drift.
+    val same = plant(d, 0, "a" -> 1.0)
+    assert(LintBench.lint(same +: files.tail, Set("a")).exists(_.contains("drift")))
+  }
+
+  test("no detail file at all fails") {
+    assert(LintBench.lint(Seq.empty, Set("a")).nonEmpty)
   }
 }

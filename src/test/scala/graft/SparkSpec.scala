@@ -4,18 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local-session base for all suites. One session per suite,
-  * config mirroring Verify/Bench (UTC, nanosAsLong, small shuffle).
+/** Shared local-session base for all suites: the mains' session config
+  * ([[GraftSession.builder]]) at a fixed local[4], plus a temp warehouse.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
     .appName(getClass.getSimpleName)
     .getOrCreate()
 

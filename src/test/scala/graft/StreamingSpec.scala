@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import graft.streaming.StreamOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1066,6 +1067,22 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Running per-user count via `flatMapGroupsWithState`, the
+    * pre-Spark-4 stateful API: the reference the TWS form is checked
+    * against below.
+    */
+  private def runningCountsFMGWS(events: DataFrame): DataFrame =
+    events.select(col("user_id"), col("event_id")).as[(Long, Long)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[Long, StreamOps.UserCount](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        case (uid, rows, state: GroupState[Long]) =>
+          val n = state.getOption.getOrElse(0L) + rows.size
+          state.update(n)
+          Iterator(StreamOps.UserCount(uid, n))
+      }
+      .toDF()
+
   test("batch transformWithState equals the flatMapGroupsWithState fallback") {
     // stream_stateful's key runs the TWS form in batch (each group seen
     // once, empty initial state) — it must agree row-for-row with the
@@ -1073,7 +1090,7 @@ class StreamingSpec extends SparkSpec {
     val events = T.events(spark, sf)
     val tws = StreamOps.runningCountsTWS(events).orderBy("user_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fm = StreamOps.runningCountsFMGWS(events).orderBy("user_id")
+    val fm = runningCountsFMGWS(events).orderBy("user_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(tws == fm, s"TWS/fMGWS drift: ${tws.take(5)} vs ${fm.take(5)}")
     assert(tws.nonEmpty)
